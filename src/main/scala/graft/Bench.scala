@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.VectorMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -10,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.local()
 
     // TIMING METHODOLOGY (r20): every query is warmed INLINE — one untimed
     // run immediately before its own timed slot — so every reported number
@@ -64,8 +57,7 @@ object Bench {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
         val wdt = (System.nanoTime() - w0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        GraftSession.release(spark)
         System.gc()
         // same settle policy as the post-timed hygiene: only heavy runs
         // leave enough concurrent-GC debt to justify a sleep (370 queries
@@ -86,8 +78,7 @@ object Bench {
       // measurement. Cleanup cost is excluded from the per-query time.
       // blocking: eviction must finish OUTSIDE this query's timed region,
       // not race into the next one's
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
       // settle GC debt outside the timed region too: a heap-heavy query's
       // collection otherwise lands in the NEXT query's wall-clock (the
       // r05 q_json_extract 12x spike sat right after the heaviest query).
@@ -111,9 +102,10 @@ object Bench {
         val samples = runs.map(_(i)._2).sorted
         name -> samples(samples.length / 2)
       }
-    val qs = results
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    // seconds as 3-decimal JSON numbers, in query order
+    def secs(kv: Seq[(String, Double)]): String =
+      Json.toJson(VectorMap.from(kv.map { case (k, v) => k -> BigDecimal(f"$v%.3f") }))
+    val qs = secs(results)
     val total = results.map(_._2).sum
 
     // Self-reconciling medians: the gate host runs under unpredictable
@@ -141,10 +133,8 @@ object Bench {
             name -> samples(samples.length / 2)
           }
       }
-    val mediansJson = medians
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val failedList = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val mediansJson = secs(medians)
+    val failedList = Json.toJson(failed.toSeq.sorted)
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"warm-second-run","queries":$qs,"failed":${failed.size},"failed_queries":$failedList,"medians":$mediansJson,"median_reps":$medReps,"sf":"$sfDir"}"""
     println(line)

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session helpers shared by Verify / Bench / tests.
+/** The session lifecycle shared by every main and the tests: build, tune,
+  * register the SQL functions, release cached blocks.
   *
   * The reference tunes its sessions at script level (8g driver,
   * shuffle.partitions=200 batch / 10 streaming, AQE + Kryo on the cluster —
@@ -154,11 +155,27 @@ object GraftSession {
       "built-in")
   }
 
-  /** Local session for tests and ad-hoc runs. */
-  def local(cores: Int = 4, shufflePartitions: Int = 8): SparkSession = {
+  /** Core count a session is built with when the caller names none: a set
+    * `SPARK_GRAFT_CPUS` wins, otherwise `available` (what `local[*]` means).
+    */
+  private[graft] def coresFrom(setting: Option[String], available: Int): Int =
+    setting.fold(available) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  private lazy val defaultCores: Int =
+    coresFrom(sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder: every main and the test suite come through
+    * here. Cores and shuffle partitions both default to the `SPARK_GRAFT_CPUS`
+    * / processor count; a `spark.master` that spark-submit has already set
+    * wins over `local[cores]`.
+    */
+  def local(cores: Int = defaultCores, shufflePartitions: Int = defaultCores): SparkSession = {
     val s = SparkSession
       .builder()
-      .master(s"local[$cores]")
+      .master(sys.props.getOrElse("spark.master", s"local[$cores]"))
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
@@ -168,5 +185,14 @@ object GraftSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)
+  }
+
+  /** Drop every cached frame and block until every persisted RDD (MLlib fit
+    * persists, eager checkpoints) is unpersisted, so one query's pinned
+    * memory cannot bleed into the next one's plan or measurement.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

@@ -44,7 +44,6 @@ object CompareSpellings {
   }
 
   def run(spark: SparkSession, sfDir: String): Seq[Result] = {
-    GraftSession.tune(spark)
     val window = time("W1 window spelling", SparkEntry.queries("q_session_features")(spark, sfDir))
     val join = time("J1 join spelling", SparkEntry.queries("q_session_features_join")(spark, sfDir))
     require(window.rows == join.rows, s"spellings disagree: ${window.rows} vs ${join.rows}")
@@ -53,7 +52,6 @@ object CompareSpellings {
 
   /** Full cross-framework run: preprocess + RF train/eval per spelling. */
   def runMl(spark: SparkSession, sfDir: String): Seq[Framework] = {
-    GraftSession.tune(spark)
     Seq("W1" -> "q_session_features", "J1" -> "q_session_features_join").map {
       case (name, query) =>
         val prep = time(name, SparkEntry.queries(query)(spark, sfDir))
@@ -99,10 +97,7 @@ object CompareSpellings {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-compare").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val Seq(w1, j1) = runMl(spark, sfDir)
     require(w1.rows == j1.rows, s"spellings disagree: ${w1.rows} vs ${j1.rows}")
     print(render(w1, j1, winnerTable(w1, j1)))

@@ -27,10 +27,7 @@ object Preprocess {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val input = opts.getOrElse("--input", sys.error("--input required"))
     val output = opts.getOrElse("--output", sys.error("--output required"))
-    // spark-submit injects the master; standalone runs fall back to local
-    val spark = SparkSession.builder().appName("graft-preprocess")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
+    val spark = GraftSession.local()
     val n = run(spark, input, output)
     println(s"[preprocess] wrote $n session-feature rows to $output")
     spark.stop()

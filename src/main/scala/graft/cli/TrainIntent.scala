@@ -32,10 +32,7 @@ object TrainIntent {
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val input = opts.getOrElse("--input", sys.error("--input required"))
-    // spark-submit injects the master; standalone runs fall back to local
-    val spark = SparkSession.builder().appName("graft-train-intent")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
+    val spark = GraftSession.local()
     val m = run(
       spark,
       input,

@@ -134,27 +134,6 @@ object KMeansReplay {
       .sortBy(_._1)
   }
 
-  /** Dev-only: [[trainedCenters]] with per-round wall-time prints (used by
-    * `graft.tools.ProfileSemDedup`; no production caller).
-    */
-  private[graft] def trainedCentersProfiled(
-      spark: SparkSession,
-      pts: DataFrame,
-      k: Int,
-      rounds: Int): Seq[(Long, Seq[Long])] = {
-    val t0 = System.nanoTime()
-    var centers = seedCenters(pts, k)
-    println(f"[profile]   seed               ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    var r = 0
-    while (r < rounds) {
-      val t1 = System.nanoTime()
-      centers = lloydRound(spark, pts, centers)
-      println(f"[profile]   round $r            ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      r += 1
-    }
-    centers
-  }
-
   /** Final per-point assignment after `rounds` center updates:
     * `(vec_id, cid, dist)` against the round-`rounds` centers.
     */

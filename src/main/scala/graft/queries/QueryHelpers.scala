@@ -76,22 +76,27 @@ private[graft] object QueryHelpers {
     * branch's per-round scheduling gaps are back-filled by another's tasks
     * instead of serializing 4 train loops end to end. Deterministic by
     * construction — every builder returns the same frame it returned when
-    * called sequentially; only the job scheduling overlaps. The active
-    * session is pinned per thread (operators take the session explicitly,
-    * but Spark's thread-inheritance of the active session is
-    * creation-time-only and pool threads may predate it).
+    * called sequentially; only the job scheduling overlaps. Each builder
+    * runs on its own thread of a pool that lives for this call only, with
+    * the active session set for the builder and cleared after it, so no
+    * thread outlives the call or keeps the session pinned.
     */
   private[graft] def buildConcurrently(
       s: SparkSession, builders: Seq[() => DataFrame]): Seq[DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(builders.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(
       Future.sequence(builders.map(b => Future {
-        org.apache.spark.sql.SparkSession.setActiveSession(s)
-        b()
+        SparkSession.setActiveSession(s)
+        try b() finally SparkSession.clearActiveSession()
       })),
       Duration(20, scala.concurrent.duration.MINUTES))
+    finally {
+      pool.shutdown()
+      pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+    }
   }
 
   /** Gap-session bounds shared by the interval-overlap queries: one row per

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.collection.mutable
+
+import graft.Json
 
 /** The serving-plane contract both metrics backends satisfy (the reference
   * switches file↔Redis behind one `update_metrics`,
@@ -20,8 +22,7 @@ trait MetricsSink {
   * dashboard process never reads a torn file; reference:
   * src/streaming/metrics_store.py:124-155).
   *
-  * JSON is emitted by a minimal hand-rolled writer (strings, numbers,
-  * booleans, maps, sequences) — no external dependencies.
+  * JSON is emitted by [[graft.Json]].
   */
 final class MetricsStore(path: String, historyLimit: Int = 1000) extends MetricsSink {
 
@@ -30,16 +31,7 @@ final class MetricsStore(path: String, historyLimit: Int = 1000) extends Metrics
   def update(current: Map[String, Any]): Unit = synchronized {
     history.enqueue(current)
     while (history.size > historyLimit) history.dequeue()
-    val doc = Map("current" -> current, "history" -> history.toSeq)
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    // unique temp name: CONCURRENT writers to the same path (e.g. two
-    // replays of the same dataset) must each move their own temp file —
-    // a shared ".tmp" makes one writer's move race the other's write
-    val tmp: Path = Paths.get(
-      path + ".tmp." + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, MetricsStore.toJson(doc).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetricsStore.writeAtomically(path, Map("current" -> current, "history" -> history.toSeq))
   }
 
   def latest: Option[Map[String, Any]] = synchronized(history.lastOption)
@@ -85,7 +77,7 @@ final class InMemoryKv extends KvBackend {
 final class KvMetricsStore(backend: KvBackend, historyLimit: Int = 1000) extends MetricsSink {
 
   def update(current: Map[String, Any]): Unit = {
-    val json = MetricsStore.toJson(current)
+    val json = Json.toJson(current)
     backend.set("current_metrics", json)
     backend.lpush("metrics_history", json)
     backend.ltrim("metrics_history", 0, historyLimit - 1)
@@ -108,14 +100,18 @@ object MetricsStore {
     * the same temp-file-then-atomic-move discipline as `update` — the one
     * place that owns the document shape for the zero-batch case.
     */
-  def writeEmpty(path: String): Unit = {
+  def writeEmpty(path: String): Unit =
+    writeAtomically(path, Map("current" -> Map.empty[String, Any], "history" -> Seq.empty[Any]))
+
+  private def writeAtomically(path: String, doc: Map[String, Any]): Unit = {
     val target = Paths.get(path)
     Option(target.getParent).foreach(Files.createDirectories(_))
+    // unique temp name: CONCURRENT writers to the same path (e.g. two
+    // replays of the same dataset) must each move their own temp file —
+    // a shared ".tmp" makes one writer's move race the other's write
     val tmp = Paths.get(path + ".tmp." + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, toJson(Map("current" -> Map.empty[String, Any],
-      "history" -> Seq.empty[Any])).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Files.write(tmp, Json.toJson(doc).getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** §2.11 serving-plane reads: load the metrics document as DataFrames so
@@ -195,29 +191,4 @@ object MetricsStore {
       .orderBy(col("purchase_probability").desc, col("session_id"))
       .limit(n)
   }
-
-  def toJson(v: Any): String = v match {
-    case null            => "null"
-    case s: String       => quote(s)
-    case b: Boolean      => b.toString
-    case d: Double       => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float        => toJson(f.toDouble)
-    case n: Number       => n.toString
-    case m: collection.Map[_, _] =>
-      m.map { case (k, x) => s"${quote(k.toString)}:${toJson(x)}" }.mkString("{", ",", "}")
-    case s: collection.Seq[_]  => s.map(toJson).mkString("[", ",", "]")
-    case a: Array[_]     => a.map(toJson).mkString("[", ",", "]")
-    case other           => quote(other.toString)
-  }
-
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
 }

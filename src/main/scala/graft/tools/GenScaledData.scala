@@ -31,7 +31,7 @@ object GenScaledData {
     val Array(srcDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
     require(copies >= 2 && copies <= 30, s"copies=$copies out of range")
-    val spark = graft.GraftSession.local(32, shufflePartitions = 32)
+    val spark = graft.GraftSession.local()
     // raw reads (GraftSession sets nanosAsLong, so events.ts stays a LONG
     // of nanos and round-trips as int64 — Tables' nanos branch then
     // applies to the output dir exactly as it does to the source)

@@ -8,7 +8,7 @@ import graft.{GraftSession, SparkEntry}
   */
 object ShowQ {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, shufflePartitions = 8)
+    val spark = GraftSession.local()
     val dir = args.head
     val showPlan = sys.env.contains("SPARK_GRAFT_SHOWQ_PLAN")
     args.tail.foreach { name =>
@@ -17,8 +17,7 @@ object ShowQ {
       if (showPlan) println(df.queryExecution.executedPlan.toString)
       else df.show(40, truncate = false)
       println(s"[showq] $name rows=${df.count()}")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
     }
     spark.stop()
   }

@@ -125,8 +125,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("json escaping handles quotes and control chars") {
-    val s = MetricsStore.toJson(Map("k" -> "a\"b\n\tc"))
+    val s = Json.toJson(Map("k" -> "a\"b\n\tc"))
     assert(s == "{\"k\":\"a\\\"b\\n\\tc\"}")
+    assert(Json.toJson("a\\b\rc\u0001") == "\"a\\\\b\\rc\\u0001\"")
+    assert(Json.toJson(Seq(Double.NaN, 1.5)) == "[null,1.5]")
   }
 
   test("sliding window agg on static frame produces expected buckets") {
