@@ -45,6 +45,13 @@ object GraftSession {
     // 100M items / 2^30 bits ≈ a 128 MB filter — still a sane broadcast.
     c.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "100000000")
     c.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "1073741824")
+    // Keep one in-memory state version per streaming state store, not
+    // Spark's 2. The second copy only serves a state stage that re-executes
+    // within a batch, and StreamJob.processBatch runs that stage once; a
+    // retried batch reloads its state from the checkpoint files instead
+    // (correct, only slower). Without this, every finished query leaves two
+    // state maps per store on the heap until Spark's maintenance sweep.
+    c.set("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
     registerFunctions(spark)
     spark
   }

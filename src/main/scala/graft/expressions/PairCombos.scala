@@ -36,10 +36,15 @@ object PairCombos {
 
   val OutType: ArrayType = ArrayType(ElemType, containsNull = false)
 
+  private val MaxCapacityHint = 1024L
+
   /** Boxed so codegen can branch on null; called from both eval paths. */
   def combosKernel(a: ArrayData): ArrayData = {
     val n = a.numElements()
-    val out = new java.util.ArrayList[AnyRef](if (n < 2) 0 else n * (n - 1) / 2)
+    // capacity hint in Long (n·(n−1)/2 overflows Int from n = 46,342),
+    // clamped: equal or null elements emit far fewer pairs than the bound
+    val out = new java.util.ArrayList[AnyRef](
+      math.min(n.toLong * (n - 1) / 2, MaxCapacityHint).toInt)
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i)) {

@@ -53,13 +53,14 @@ object IntentModel {
         .setLabelCol("label")
         .setMetricName("areaUnderROC")
         .evaluate(pred)
-      def multi(metric: String): Double =
-        new MulticlassClassificationEvaluator()
-          .setLabelCol("label")
-          .setPredictionCol("prediction")
-          .setMetricName(metric)
-          .evaluate(pred)
-      Metrics(auc, multi("accuracy"), multi("f1"), multi("weightedRecall"))
+      // one confusion-matrix job serves all three multiclass metrics; each
+      // is the value the evaluator returns for "accuracy" / "f1" /
+      // "weightedRecall" (pinned bit-identical in MlSpec)
+      val multi = new MulticlassClassificationEvaluator()
+        .setLabelCol("label")
+        .setPredictionCol("prediction")
+        .getMetrics(pred)
+      Metrics(auc, multi.accuracy, multi.weightedFMeasure, multi.weightedRecall)
     } finally pred.unpersist()
   }
 

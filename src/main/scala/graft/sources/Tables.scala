@@ -133,16 +133,20 @@ object Tables {
   // partition-count probe cache: planning the same scan hundreds of times
   // per Verify/Bench run would re-list the file each call; the count is a
   // pure function of (file bytes, session parallelism, split confs), so the
-  // key carries the file's length+mtime (r21, ADVICE: a rewrite of the same
-  // path in one JVM must not serve a stale count). Bounded: cleared if it
-  // ever exceeds MaxEntries (a long-lived JVM cycling many data dirs) —
-  // losing the cache only costs a re-probe.
+  // key carries the file's length+mtime — for a directory dataset, every
+  // part file's name, length and mtime, since a directory's own length and
+  // mtime need not change when its parts do (a rewrite of the same path in
+  // one JVM must not serve a stale count). Bounded: cleared if it ever
+  // exceeds MaxEntries (a long-lived JVM cycling many data dirs) — losing
+  // the cache only costs a re-probe.
   private val MaxEntries = 1024
   private val scanPartsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private def stamp(f: java.io.File): String = s"${f.length}@${f.lastModified}"
   private[graft] def scanParts(key: String, path: String, df: DataFrame): Int = {
     val f = new java.io.File(path)
-    val full = s"$key#${f.length}@${f.lastModified}"
+    val parts = Option(f.listFiles).fold("")(_.map(p => s"${p.getName}:${stamp(p)}").sorted.mkString(","))
+    val full = s"$key#${stamp(f)}[$parts]"
     if (scanPartsCache.size > MaxEntries) scanPartsCache.clear()
     scanPartsCache.computeIfAbsent(full, _ => df.rdd.getNumPartitions).intValue
   }

@@ -17,11 +17,15 @@ import graft.ml.OnlineLogreg
   *
   * The per-batch scoring mirrors the reference's deliberate driver-side
   * design (stream_processor.py:226 collects the whole micro-batch): the
-  * model state lives on the driver, so we collect at most `maxScoredRows`
+  * model state lives on the driver, so we score at most `maxScoredRows`
   * rows per trigger (update-mode emits only changed windows — bounded by
   * active sessions per slide, not by history). Feedback rule: purchase>0 →
   * label 1; no purchase but cart>0 → label 0; view-only windows are skipped
   * as negatives (stream_processor.py:272-278).
+  *
+  * Each micro-batch costs one Spark job: the `foreachBatch` frame re-runs
+  * the stateful aggregation on every action, so [[processBatch]] reads it in
+  * a single pass that yields both the totals and the scored rows.
   */
 object StreamJob {
 
@@ -92,7 +96,48 @@ object StreamJob {
       slideDuration = conf.slideDuration
     )
 
-  /** T6: per-micro-batch scoring + online learning + metrics write. */
+  /** The frame columns [[processBatch]] reads: the scored row layout, then
+    * `total_events` for the totals.
+    */
+  private val BatchCols =
+    Seq("user_session", "view_count", "cart_count", "purchase_count", "session_duration",
+      "avg_price", "max_price", "unique_items", "total_events").map(col)
+
+  /** Indices into [[BatchCols]] summed into the micro-batch totals: views,
+    * carts, purchases, total_events (nulls skipped, as `sum` skips them).
+    */
+  private val SummedCols = Array(1, 2, 3, 8)
+  /** The slot after the sums holds the row count (`active_sessions`). */
+  private val CountSlot = SummedCols.length
+
+  /** One partition's share of a micro-batch: the [[SummedCols]] sums and
+    * row count, and the partition's first `keep` rows.
+    */
+  private def foldPartition(keep: Int)(it: Iterator[Row]): (Array[Long], Array[Row]) = {
+    val sums = new Array[Long](CountSlot + 1)
+    val kept = Array.newBuilder[Row]
+    it.foreach { r =>
+      var i = 0
+      while (i < SummedCols.length) {
+        val c = SummedCols(i)
+        if (!r.isNullAt(c)) sums(i) += r.getAs[Number](c).longValue
+        i += 1
+      }
+      if (sums(CountSlot) < keep) kept += r
+      sums(CountSlot) += 1
+    }
+    (sums, kept.result())
+  }
+
+  /** T6: per-micro-batch scoring + online learning + metrics write.
+    *
+    * One Spark job reads the micro-batch once: each partition folds its
+    * partial totals and keeps its first `maxScoredRows` rows. The driver
+    * sums the partials, skips the store update when the batch has no rows,
+    * and scores the first `maxScoredRows` kept rows in partition order — the
+    * rows `limit(maxScoredRows).collect()` returns. The job ships at most
+    * partitions × `maxScoredRows` rows to the driver.
+    */
   def processBatch(
       batch: DataFrame,
       batchId: Long,
@@ -100,27 +145,16 @@ object StreamJob {
       store: MetricsSink,
       maxScoredRows: Int = 1000
   ): Unit = {
-    if (batch.isEmpty) return
-    // Spark-side totals (A7) — no driver collect for the aggregate part.
-    val totals = batch
-      .agg(
-        sum("view_count").as("total_views"),
-        sum("cart_count").as("total_carts"),
-        sum("purchase_count").as("total_purchases"),
-        sum("total_events").as("total_events"),
-        count(lit(1)).as("active_sessions")
-      )
-      .collect()(0)
-    def l(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
-    val carts = l(1)
-    val purchases = l(2)
+    val rdd = batch.select(BatchCols: _*).rdd
+    val parts = rdd.sparkContext.runJob(rdd, foldPartition(maxScoredRows) _)
+    val totals = new Array[Long](CountSlot + 1)
+    parts.foreach { case (sums, _) => totals.indices.foreach(i => totals(i) += sums(i)) }
+    if (totals(CountSlot) == 0) return
+    val carts = totals(1)
+    val purchases = totals(2)
     val conversion = if (carts == 0) 0.0 else purchases.toDouble / carts * 100.0
 
-    val rows: Array[Row] = batch
-      .select("user_session", "view_count", "cart_count", "purchase_count",
-        "session_duration", "avg_price", "max_price", "unique_items")
-      .limit(maxScoredRows)
-      .collect()
+    val rows: Array[Row] = parts.iterator.flatMap(_._2).take(maxScoredRows).toArray
 
     val predictions = rows.map { r =>
       def d(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.get(i) match {
@@ -149,11 +183,11 @@ object StreamJob {
       Map(
         "batch_id" -> batchId,
         "batch_count" -> rows.length,
-        "total_views" -> l(0),
+        "total_views" -> totals(0),
         "total_carts" -> carts,
         "total_purchases" -> purchases,
-        "total_events" -> l(3),
-        "active_sessions" -> l(4),
+        "total_events" -> totals(3),
+        "active_sessions" -> totals(CountSlot),
         "conversion_rate" -> conversion,
         "timestamp" -> Instant.now().toString,
         "predictions" -> predictions.take(50).toSeq,

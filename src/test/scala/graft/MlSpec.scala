@@ -44,6 +44,35 @@ class MlSpec extends AnyFunSuite {
     assert(m.f1 >= 0.8, s"F1 ${m.f1}")
   }
 
+  test("evaluate's one-pass multiclass metrics are bit-identical to three evaluator calls") {
+    // noisy labels, so accuracy/f1/recall are not all 1.0
+    val noisy = spark.range(3000).select(
+      when(rand(3) < 0.3, $"id" % 2).otherwise(($"id" / 7).cast("long") % 2).as("label"),
+      ($"id" % 7).as("view_count"),
+      ($"id" % 3).as("cart_count"),
+      ($"id" % 11 * 10.0).as("session_duration"),
+      (rand(5) * 40).as("avg_price"),
+      ($"id" % 13 * 5.0).as("max_price"),
+      ($"id" % 4 + 1.0).as("unique_items"))
+    val Array(trainDf, testDf) = IntentModel.assemble(noisy).randomSplit(Array(0.8, 0.2), 42L)
+    val held = testDf.cache()
+    try {
+      val model = IntentModel.train(trainDf, numTrees = 5, maxDepth = 3)
+      val m = IntentModel.evaluate(model, held)
+      val pred = model.transform(held)
+      def multi(metric: String): Double =
+        new org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator()
+          .setLabelCol("label").setPredictionCol("prediction").setMetricName(metric)
+          .evaluate(pred)
+      assert(m.accuracy < 1.0)
+      Seq(m.accuracy -> multi("accuracy"), m.f1 -> multi("f1"),
+        m.weightedRecall -> multi("weightedRecall")).foreach { case (got, exp) =>
+        assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(exp),
+          s"$got != $exp")
+      }
+    } finally held.unpersist()
+  }
+
   test("feature importances sum to 1 and rank a real signal first") {
     val f = graft.SparkEntry.queries("q_session_features")(spark, TestSpark.Sf0001)
     val (model, _) = IntentModel.trainEval(f)

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
 import graft.expressions.PairCombos
@@ -49,5 +50,11 @@ class PairCombosSpec extends AnyFunSuite {
   test("pairs come out (min, max) regardless of list order") {
     val df = Seq((1L, Seq(9L, 2L, 5L))).toDF("id", "docs")
     assert(viaKernel(df).toSet == Set((2L, 9L), (5L, 9L), (2L, 5L)))
+  }
+
+  test("46,342 null elements emit no pairs: the capacity hint does not overflow Int") {
+    // n·(n−1)/2 at n = 46,342 exceeds Int.MaxValue
+    val nulls = new GenericArrayData(Array.fill[Any](46342)(null))
+    assert(PairCombos.combosKernel(nulls).numElements() == 0)
   }
 }

@@ -2,12 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.OnlineLogreg
 import graft.sources.Tables
-import graft.streaming.{InMemoryKv, KvMetricsStore, MetricsStore, SessionWindows, StreamJob}
+import graft.streaming.{InMemoryKv, KvMetricsStore, MetricsSink, MetricsStore, SessionWindows, StreamJob}
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -334,14 +335,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(ids.sameElements(Array(1L, 3L)))
   }
 
+  /** One JSON-lines clickstream event in the Kafka envelope (EventSchema). */
+  private def evt(t: String, typ: String, sess: String, price: Double) =
+    s"""{"event_time":"$t UTC","event_type":"$typ","product_id":1,"category_id":1,""" +
+      s""""category_code":"c","brand":"b","price":$price,"user_id":1,""" +
+      s""""user_session":"$sess","ingestion_time":"$t"}"""
+
   test("end-to-end stream: file source → watermark+window → foreachBatch → metrics JSON") {
     val dir = Files.createTempDirectory("graft-stream-in")
     val metricsPath = Files.createTempDirectory("graft-stream-m").toString + "/m.json"
     val checkpoint = Files.createTempDirectory("graft-stream-cp").toString
-    def evt(t: String, typ: String, sess: String, price: Double) =
-      s"""{"event_time":"$t UTC","event_type":"$typ","product_id":1,"category_id":1,""" +
-        s""""category_code":"c","brand":"b","price":$price,"user_id":1,""" +
-        s""""user_session":"$sess","ingestion_time":"$t"}"""
     val lines = Seq(
       evt("2024-01-01 10:00:05", "view", "s1", 10.0),
       evt("2024-01-01 10:00:15", "cart", "s1", 20.0),
@@ -406,6 +409,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(kv.get("conversion_rate").contains("100.0"))
   }
 
+  /** Keeps every store update in memory, for specs that read them back. */
+  private class RecordingSink extends MetricsSink {
+    val updates = scala.collection.mutable.ArrayBuffer[Map[String, Any]]()
+    def update(current: Map[String, Any]): Unit = synchronized { updates += current }
+    def latest: Option[Map[String, Any]] = synchronized { updates.lastOption }
+    def size: Int = synchronized { updates.size }
+    // `det`: deterministic Spark-side fields only, for the T5 restart
+    // parity compare. timestamp is wall-clock and predictions depend on the
+    // driver-side model instance (S9 model persistence is its own surface,
+    // tested in OnlineLogreg's spec). batch_id is excluded: a stopping
+    // query may commit a trailing NO-DATA batch (watermark bookkeeping)
+    // that processBatch skips as empty, so the restarted data batch's id
+    // can be continuous+1 vs the uninterrupted twin; T5 asserts continuity
+    // separately.
+    private val DetKeys = Set("batch_count", "total_views",
+      "total_carts", "total_purchases", "total_events", "active_sessions",
+      "conversion_rate")
+    def det: Seq[Map[String, Any]] =
+      synchronized { updates.toSeq.map(_.filter(kv => DetKeys(kv._1))) }
+    def batchIds: Seq[Long] =
+      synchronized { updates.toSeq.map(_("batch_id").asInstanceOf[Long]) }
+  }
+
   test("T5 checkpoint restart: stopped StreamJob resumes window state from its checkpoint") {
     // The recovery contract (reference stream_processor.py:332): kill the
     // query after batch 0, restart from the SAME checkpoint, feed batch 1 —
@@ -416,32 +442,6 @@ class StreamingSpec extends AnyFunSuite {
     // by emission-sequence parity with an uninterrupted run that saw both
     // files at one-file-per-trigger: if state were lost, s1's windows would
     // re-emit with view=0/cart=0 after restart and the totals would differ.
-    import graft.streaming.MetricsSink
-    class RecordingSink extends MetricsSink {
-      val updates = scala.collection.mutable.ArrayBuffer[Map[String, Any]]()
-      def update(current: Map[String, Any]): Unit = synchronized { updates += current }
-      def latest: Option[Map[String, Any]] = synchronized { updates.lastOption }
-      def size: Int = synchronized { updates.size }
-      // deterministic Spark-side fields only: timestamp is wall-clock and
-      // predictions depend on the driver-side model instance (S9 model
-      // persistence is its own surface, tested in OnlineLogreg's spec)
-      // batch_id is excluded from the parity compare: a stopping query may
-      // commit a trailing NO-DATA batch (watermark bookkeeping) that
-      // processBatch skips as empty, so the restarted data batch's id can
-      // be continuous+1 vs the uninterrupted twin. Continuity is asserted
-      // separately below.
-      private val DetKeys = Set("batch_count", "total_views",
-        "total_carts", "total_purchases", "total_events", "active_sessions",
-        "conversion_rate")
-      def det: Seq[Map[String, Any]] =
-        synchronized { updates.toSeq.map(_.filter(kv => DetKeys(kv._1))) }
-      def batchIds: Seq[Long] =
-        synchronized { updates.toSeq.map(_("batch_id").asInstanceOf[Long]) }
-    }
-    def evt(t: String, typ: String, sess: String, price: Double) =
-      s"""{"event_time":"$t UTC","event_type":"$typ","product_id":1,"category_id":1,""" +
-        s""""category_code":"c","brand":"b","price":$price,"user_id":1,""" +
-        s""""user_session":"$sess","ingestion_time":"$t"}"""
     // batch 1's purchase lands in the SAME windows batch 0's s1 events
     // opened — the state-recovery probe; s2 opens fresh windows
     val b0 = Seq(
@@ -510,6 +510,100 @@ class StreamingSpec extends AnyFunSuite {
     // restart (2 views from s1 state + 2 from s2's new windows)
     assert(last("total_views") == 4L && last("total_carts") == 2L &&
       last("total_purchases") == 2L, s"window state not recovered: $last")
+  }
+
+  /** A static stand-in for a session-window micro-batch: the columns
+    * processBatch reads, `rows` rows spread over `parts` partitions, with a
+    * null view_count every 17th row.
+    */
+  private def windowFrame(rows: Int, parts: Int): DataFrame =
+    spark.range(0, rows, 1, parts).select(
+      concat(lit("s"), $"id").as("user_session"),
+      when($"id" % 17 =!= 0, $"id" % 5).as("view_count"),
+      ($"id" % 3).as("cart_count"),
+      ($"id" % 7 === 0).cast("long").as("purchase_count"),
+      ($"id" * 11 % 300).as("session_duration"),
+      ($"id" % 13 * 2.5).as("avg_price"),
+      ($"id" % 13 * 3.0).as("max_price"),
+      ($"id" % 4 + 1).as("unique_items"),
+      ($"id" % 5 + $"id" % 3 + 1).as("total_events"))
+
+  test("processBatch in one pass equals the agg + limit(n).collect() spelling") {
+    val frame = windowFrame(rows = 40, parts = 4)
+    assert(frame.rdd.glom().collect().map(_.length).toSeq == Seq(10, 10, 10, 10))
+    val n = 25 // ends inside partition 2
+    val sink = new RecordingSink
+    StreamJob.processBatch(frame, 7L, new OnlineLogreg(nFeatures = 6), sink, maxScoredRows = n)
+    assert(sink.size == 1)
+    val u = sink.updates.head
+
+    val t = frame.agg(sum("view_count"), sum("cart_count"), sum("purchase_count"),
+      sum("total_events"), count(lit(1))).collect()(0)
+    val limited = frame
+      .select("user_session", "view_count", "cart_count", "purchase_count",
+        "session_duration", "avg_price", "max_price", "unique_items")
+      .limit(n).collect().map(_.getString(0)).toSeq
+    assert(u("total_views") == t.getLong(0))
+    assert(u("total_carts") == t.getLong(1))
+    assert(u("total_purchases") == t.getLong(2))
+    assert(u("total_events") == t.getLong(3))
+    assert(u("active_sessions") == t.getLong(4))
+    assert(u("conversion_rate") == t.getLong(2).toDouble / t.getLong(1) * 100.0)
+    assert(u("batch_count") == n)
+    val scored = u("predictions").asInstanceOf[Seq[Map[String, Any]]].map(_("session_id"))
+    assert(scored == limited)
+  }
+
+  test("processBatch writes no store update for an empty micro-batch") {
+    val sink = new RecordingSink
+    StreamJob.processBatch(windowFrame(rows = 0, parts = 4), 0L, new OnlineLogreg(nFeatures = 6), sink)
+    assert(sink.size == 0)
+  }
+
+  test("processBatch runs one Spark job per non-empty micro-batch") {
+    val dir = Files.createTempDirectory("graft-jobs-in")
+    val checkpoint = Files.createTempDirectory("graft-jobs-cp").toString
+    Files.write(dir.resolve("b0.txt"), Seq(
+      evt("2024-01-01 10:00:05", "view", "s1", 9.5),
+      evt("2024-01-01 10:00:15", "cart", "s1", 9.5),
+      evt("2024-01-01 10:00:20", "view", "s2", 9.5)).mkString("\n").getBytes)
+    Files.write(dir.resolve("b1.txt"), Seq(
+      evt("2024-01-01 10:00:25", "purchase", "s1", 9.5),
+      evt("2024-01-01 10:01:35", "view", "s3", 9.5)).mkString("\n").getBytes)
+
+    val sc = spark.sparkContext
+    val BatchProp = "graft.spec.batch"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(BatchProp)))
+          .foreach(b => jobs.merge(b.toLong, 1, _ + _))
+    }
+    val sink = new RecordingSink
+    val model = new OnlineLogreg(nFeatures = 6)
+    val conf = StreamJob.Config(
+      checkpointDir = checkpoint, windowDuration = "1 minute", slideDuration = "30 seconds")
+    val raw = spark.readStream.format("text").option("maxFilesPerTrigger", "1")
+      .load(dir.toString).select($"value".as("json_str"))
+    sc.addSparkListener(listener)
+    try {
+      val q = StreamJob.sessionAggStream(StreamJob.parse(raw), conf).writeStream
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          sc.setLocalProperty(BatchProp, id.toString)
+          try StreamJob.processBatch(b, id, model, sink)
+          finally sc.setLocalProperty(BatchProp, null)
+        }
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    val updated = sink.batchIds
+    assert(updated.size == 2, s"store updates for batches $updated")
+    assert(updated.map(id => id -> jobs.getOrDefault(id, 0)) == updated.map(_ -> 1))
   }
 
   test("stateless curation ops (PiiScrub, HashSplit, Repetition) compose on a stream") {

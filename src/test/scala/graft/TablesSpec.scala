@@ -84,4 +84,18 @@ class TablesSpec extends AnyFunSuite {
     assert(bad === 0L, s"$bad rows with ts_ns inconsistent with ts")
     assert(ev.count() > 0L)
   }
+
+  test("scanParts: a same-path rewrite with a different part count returns the new count") {
+    val path = Files.createTempDirectory("scan_parts").resolve("t.parquet").toString
+    val dir = new java.io.File(path)
+    spark.range(0, 1000, 1, 3).write.mode("overwrite").parquet(path)
+    val mtime = dir.lastModified
+    val before = Tables.scanParts("t", path, spark.read.parquet(path))
+    spark.range(0, 1000, 1, 1).write.mode("overwrite").parquet(path)
+    // a store whose directory mtime does not move when the parts change
+    assert(dir.setLastModified(mtime))
+    val fresh = spark.read.parquet(path).rdd.getNumPartitions
+    assert(fresh != before, s"fixture must change the count: $before -> $fresh")
+    assert(Tables.scanParts("t", path, spark.read.parquet(path)) == fresh)
+  }
 }
